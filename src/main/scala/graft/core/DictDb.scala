@@ -49,17 +49,8 @@ final case class DictDb(triples: DataFrame,
                         predIndex: Map[String, DataFrame] = Map.empty,
                         stats: Map[String, Long] = Map.empty) {
 
-  /** Rehydrate id columns back to term structs: one left join against
-    * the dict per column, at the edge of the plan where the result is
-    * small. NULL ids (unbound optional vars) stay NULL structs.
-    *
-    * `extraTerms`: terms that can reach a solution without living in
-    * the db — a `values` generator binds its collection elements
-    * directly (membero succeeds on coll membership, not db membership,
-    * alpha.clj:175-176) — so the decode dictionary is `dict ∪ extras`.
-    * Terms present in both carry the same id AND the same struct, so
-    * the dedup is value-deterministic.
-    */
+  /** Rehydrate id columns back to term structs
+    * ([[DictDb.decodeWith]]). */
   def decode(df: DataFrame, cols: Seq[String],
              extraTerms: Seq[Term] = Nil): DataFrame =
     DictDb.decodeWith(dict, df, cols, extraTerms)
@@ -316,18 +307,12 @@ object DictDb {
     */
   def save(db: DictDb, path: String, dictTable: String,
            buckets: Int = 32): Unit = {
-    db.triples.withColumn("pid", col("p"))
-      .write.mode("overwrite").partitionBy("pid").parquet(s"$path/triples")
+    tripleLayout.write(db.triples, s"$path/triples", "overwrite")
     db.dict.write.mode("overwrite").format("parquet")
       .bucketBy(buckets, "id").sortBy("id")
       .option("path", s"$path/dict").saveAsTable(dictTable)
   }
 
-  /** Load a [[save]]d store: predicate slices rebuilt from the
-    * partition directories (their NAMES come from one tiny dict probe
-    * over the keyword ids — partition values are a metadata-only
-    * query), per-slice stats from parquet metadata, dict read bucketed.
-    */
   /** GDPR-style takedown for a [[save]]d dict store: append the doomed
     * encoded triples (long columns s/p/o) to the tombstone set under
     * the triples dir. [[load]] masks them; [[compact]] reclaims the
@@ -337,35 +322,34 @@ object DictDb {
     * the triples side).
     */
   def deleteTriples(triples: DataFrame, path: String): Unit =
-    Tombstones.append(
-      triples.select(col("s"), col("p"), col("o"), col("p").as("pid")),
-      s"$path/triples", keyCols = Seq("s", "p", "o"))
+    tripleLayout.delete(triples, s"$path/triples")
 
   /** Physically drop tombstoned triples, pruned to the affected
     * predicate-id partitions; only files holding a deleted triple are
     * rewritten. */
   def compact(spark: SparkSession, path: String): Unit =
-    Tombstones.compactPartitioned(spark, s"$path/triples",
-      Seq("s", "p", "o"), "pid")
+    tripleLayout.compact(spark, s"$path/triples")
 
-  def load(spark: SparkSession, path: String, dictTable: String): DictDb = {
-    val raw0 = spark.read.parquet(s"$path/triples")
-    val raw = Tombstones.mask(spark, s"$path/triples", raw0, Seq("s", "p", "o"))
-    val dict = spark.table(dictTable)
-    val pids = raw0.select("pid").distinct().collect().map(_.getLong(0))
-    val names = dict
-      .where(col("id").isin(pids.toIndexedSeq: _*) &&
-        col("term.kind") === Term.KKeyword)
+  /** Durable file layouts of [[save]] and [[saveQuads]]. */
+  private[graft] val tripleLayout = StoreLayout.byPredicateId("s", "p", "o")
+  private[graft] val quadLayout = StoreLayout.byPredicateId("s", "p", "o", "g")
+
+  /** Slice names of a `pid`-partitioned store: one dict probe over the
+    * keyword ids whose partition directories hold data. */
+  private def keywordNames(dict: DataFrame)(pids: Seq[Any]): Map[Any, String] =
+    dict.where(col("id").isin(pids: _*) && col("term.kind") === Term.KKeyword)
       .select(col("id"), col("term.lex"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val slices = names.map { case (pid, name) =>
-      name -> raw.where(col("pid") === pid).drop("pid")
-    }
-    val stats = slices.map { case (name, slice) =>
-      name -> slice.queryExecution.optimizedPlan.stats.sizeInBytes
-        .min(BigInt(Long.MaxValue)).toLong
-    }
-    DictDb(raw.drop("pid"), dict, slices, stats)
+      .collect().map(r => (r.getLong(0): Any) -> r.getString(1)).toMap
+
+  /** Load a [[save]]d store: predicate slices from the partition
+    * directories (their NAMES from one dict probe — the only job of
+    * the open), per-slice sizes from file metadata, dict read bucketed,
+    * tombstoned triples masked. */
+  def load(spark: SparkSession, path: String, dictTable: String): DictDb = {
+    val dict = spark.table(dictTable)
+    val (triples, slices, stats) =
+      tripleLayout.open(spark, s"$path/triples", keywordNames(dict))
+    DictDb(triples, dict, slices, stats)
   }
 
   // ---- durable form of the encoded QUAD store: [[save]]/[[load]]/
@@ -375,8 +359,7 @@ object DictDb {
 
   def saveQuads(db: DictQuadDb, path: String, dictTable: String,
                 buckets: Int = 32): Unit = {
-    db.quads.withColumn("pid", col("p"))
-      .write.mode("overwrite").partitionBy("pid").parquet(s"$path/quads")
+    quadLayout.write(db.quads, s"$path/quads", "overwrite")
     db.dict.write.mode("overwrite").format("parquet")
       .bucketBy(buckets, "id").sortBy("id")
       .option("path", s"$path/dict").saveAsTable(dictTable)
@@ -387,37 +370,20 @@ object DictDb {
     * the full quad, so the same triple in another graph stays live.
     * Orphaned dict entries are harmless, as in [[deleteTriples]]. */
   def deleteQuadRows(quads: DataFrame, path: String): Unit =
-    Tombstones.append(
-      quads.select(col("s"), col("p"), col("o"), col("g"),
-        col("p").as("pid")),
-      s"$path/quads", keyCols = Seq("s", "p", "o", "g"))
+    quadLayout.delete(quads, s"$path/quads")
 
   /** Physically drop tombstoned quads, pruned to affected predicate-id
     * partitions; only files holding a deleted quad are rewritten. */
   def compactQuads(spark: SparkSession, path: String): Unit =
-    Tombstones.compactPartitioned(spark, s"$path/quads",
-      Seq("s", "p", "o", "g"), "pid")
+    quadLayout.compact(spark, s"$path/quads")
 
+  /** Load a [[saveQuads]]-durable store (≙ [[load]]). */
   def loadQuads(spark: SparkSession, path: String,
                 dictTable: String): DictQuadDb = {
-    val raw0 = spark.read.parquet(s"$path/quads")
-    val raw = Tombstones.mask(spark, s"$path/quads", raw0,
-      Seq("s", "p", "o", "g"))
     val dict = spark.table(dictTable)
-    val pids = raw0.select("pid").distinct().collect().map(_.getLong(0))
-    val names = dict
-      .where(col("id").isin(pids.toIndexedSeq: _*) &&
-        col("term.kind") === Term.KKeyword)
-      .select(col("id"), col("term.lex"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val slices = names.map { case (pid, name) =>
-      name -> raw.where(col("pid") === pid).drop("pid")
-    }
-    val stats = slices.map { case (name, slice) =>
-      name -> slice.queryExecution.optimizedPlan.stats.sizeInBytes
-        .min(BigInt(Long.MaxValue)).toLong
-    }
-    DictQuadDb(raw.drop("pid"), dict, slices, stats)
+    val (quads, slices, stats) =
+      quadLayout.open(spark, s"$path/quads", keywordNames(dict))
+    DictQuadDb(quads, dict, slices, stats)
   }
 
   /** [[merge]] for encoded quad stores: set union on the four 8-byte

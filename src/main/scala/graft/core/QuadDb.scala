@@ -139,40 +139,24 @@ object QuadDb {
     * [[TripleDb.save]] — ground-predicate scans prune to one partition
     * directory; the graph column rides along and graph scoping remains
     * a pushed filter. */
-  def save(db: QuadDb, path: String): Unit = {
-    val predName = when(col("p.kind") === Term.KKeyword, col("p.lex"))
-      .otherwise(lit("__other"))
-    db.df.withColumn("pred", predName)
-      .write.mode("overwrite").partitionBy("pred").parquet(path)
-  }
+  def save(db: QuadDb, path: String): Unit =
+    layout.write(db.df, path, "overwrite")
 
-  /** The masked quad FRAME of a [[save]]d store, without slice/stats
-    * building — the mutation-internal read ([[graft.ops.Update]] /
-    * [[graft.ops.GraphMgmt]] deltas): those paths only anti-join or
-    * filter the frame, so [[load]]'s per-load partition-listing job
-    * (the `pred` distinct) and slice stats are pure overhead there.
-    * Query paths keep [[load]]. */
+  /** Durable file layout of [[save]]. */
+  private[graft] val layout: StoreLayout = StoreLayout.byPredicate(schema)
+
+  /** The masked quad FRAME of a [[save]]d store, without slices or
+    * stats — the mutation-internal read; query paths keep [[load]]. */
   private[graft] def loadFrame(spark: SparkSession, path: String): DataFrame =
-    Tombstones.mask(spark, path, spark.read.parquet(path),
-      Seq("s", "p", "o", "g")).drop("pred")
+    layout.frame(spark, path)
 
-  /** Load a [[save]]d quad store, rebuilding predicate slices from the
-    * partition directories. Deleted-but-not-yet-compacted quads are
-    * masked at read (same [[Tombstones]] contract as [[TripleDb.load]]). */
+  /** Load a [[save]]d quad store, predicate slices from the partition
+    * directories. Deleted-but-not-yet-compacted quads are masked at
+    * read (same [[Tombstones]] contract as [[TripleDb.load]]). Runs no
+    * Spark job ([[StoreLayout]]). */
   def load(spark: SparkSession, path: String): QuadDb = {
-    val raw0 = spark.read.parquet(path)
-    val raw = Tombstones.mask(spark, path, raw0, Seq("s", "p", "o", "g"))
-    // metadata-only job: distinct values of a partition column
-    val preds = raw0.select("pred").distinct().collect()
-      .map(_.getString(0)).filter(_ != "__other")
-    val slices = preds.map { name =>
-      name -> raw.where(col("pred") === name).drop("pred")
-    }.toMap
-    val stats = slices.map { case (name, slice) =>
-      name -> slice.queryExecution.optimizedPlan.stats.sizeInBytes
-        .min(BigInt(Long.MaxValue)).toLong
-    }
-    QuadDb(raw.drop("pred"), slices, stats)
+    val (df, slices, stats) = layout.open(spark, path)
+    QuadDb(df, slices, stats)
   }
 
   /** Per-GRAPH VoID statistics: the W3C VoID property-partition
@@ -193,23 +177,15 @@ object QuadDb {
     * quads; [[compact]] reclaims the space physically. Keys are the
     * full quad: the same triple asserted in another graph is a
     * different fact and stays live. */
-  def deleteQuads(quads: DataFrame, path: String): Unit = {
-    val predName = when(col("p.kind") === Term.KKeyword, col("p.lex"))
-      .otherwise(lit("__other"))
-    Tombstones.append(
-      quads.select(col("s"), col("p"), col("o"), col("g"),
-        predName.as("pred")),
-      path, keyCols = Seq("s", "p", "o", "g"))
-  }
+  def deleteQuads(quads: DataFrame, path: String): Unit =
+    layout.delete(quads, path)
 
   /** Delete EVERY fact about the given subjects across ALL graphs (the
     * takedown unit of [[TripleDb.deleteSubjects]], extended to the
     * union dataset). `subjects` needs a Term-struct column `s`. */
   def deleteSubjects(spark: SparkSession, path: String,
                      subjects: DataFrame): Unit =
-    deleteQuads(
-      loadFrame(spark, path).join(subjects.select("s"), Seq("s"), "left_semi"),
-      path)
+    layout.deleteSubjects(spark, path, subjects)
 
   /** Delete a whole named graph — the takedown unit quads ADD over
     * triples (a tenant / source / crawl-snapshot graph). One masked
@@ -219,8 +195,8 @@ object QuadDb {
 
   /** Physically drop tombstoned quads: partition-pruned to the affected
     * `pred=` directories, and only files holding a deleted quad are
-    * rewritten ([[Tombstones.compactPartitioned]]). Load before and
+    * rewritten ([[StoreLayout.compact]]). Load before and
     * after are equivalent. */
   def compact(spark: SparkSession, path: String): Unit =
-    Tombstones.compactPartitioned(spark, path, Seq("s", "p", "o", "g"), "pred")
+    layout.compact(spark, path)
 }

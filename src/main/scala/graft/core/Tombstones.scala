@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Shared tombstone + partition-pruned-compaction machinery for the
   * durable stores ([[TripleDb]], [[DictDb]]) — the same GDPR contract
@@ -65,16 +66,21 @@ private[graft] object Tombstones {
 
   /** Hadoop `FileSystem.rename` signals most failures by returning
     * FALSE, not throwing — an unchecked rename in the tombstone swap
-    * silently skips the step and later loads resurrect deleted facts.
-    * Every swap rename goes through this loud wrapper. */
+    * silently skips the step and later loads resurrect deleted facts
+    * (in compaction: drops live rows). Every rename goes through this
+    * loud wrapper; `state` says what the failure left behind. */
   private def renameOrDie(fs: org.apache.hadoop.fs.FileSystem,
                           src: org.apache.hadoop.fs.Path,
-                          dst: org.apache.hadoop.fs.Path): Unit =
+                          dst: org.apache.hadoop.fs.Path,
+                          state: String = "tombstone set unchanged"): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(
-        s"tombstone swap rename failed: $src -> $dst (filesystem " +
-          "returned false); the tombstone set was NOT modified — " +
-          "resolve the target path collision and retry")
+        s"rename failed: $src -> $dst (filesystem returned false); " +
+          s"$state — resolve the target path collision and retry")
+
+  /** Declared key types for a tombstone read, from the frame served. */
+  private def keySchema(df: DataFrame, keyCols: Seq[String]): StructType =
+    StructType(keyCols.map(df.schema(_)))
 
   /** Append tombstone rows (whatever key columns the store joins on,
     * plus its partition column for pruned compaction) and refresh the
@@ -101,7 +107,7 @@ private[graft] object Tombstones {
     // the covering sidecar. (round-15 optimization; guide §1.2 "don't
     // compute things you throw away")
     if (bloomWorthwhile(spark, tombDir))
-      refreshBloom(spark, tombDir, keyCols)
+      refreshBloom(spark, tombDir, keySchema(rows, keyCols))
   }
 
   /** True when the tombstone DATA bytes have reached the mask's bloom
@@ -150,16 +156,17 @@ private[graft] object Tombstones {
     * old sidecar or the new one, never a torn file; stamped with the
     * covered file-listing fingerprint so a stale sidecar (concurrent
     * append, failed refresh) self-invalidates instead of silently
-    * missing keys. */
+    * missing keys. `keys` declares the key columns and their types. */
   def refreshBloom(spark: SparkSession, tombDir: String,
-                   keyCols: Seq[String], fpp: Double = 0.01): Unit = {
+                   keys: StructType, fpp: Double = 0.01): Unit = {
     import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     // fingerprint FIRST, read second: a file landing in between makes
     // the stamp stale-looking and the mask falls back — safe direction
     val fp = listingFingerprint(spark, tombDir)
-    val tomb = spark.read.parquet(tombDir).select(keyCols.map(col): _*)
+    val keyCols = keys.fieldNames.toSeq
+    val tomb = spark.read.schema(keys).parquet(tombDir)
     val n = tomb.count()
     if (n == 0) return
     val numBits = math.max(64L, math.ceil(
@@ -202,7 +209,8 @@ private[graft] object Tombstones {
       out.write(bin)
     } finally out.close()
     fs.delete(dst, false)
-    fs.rename(tmp, dst)
+    renameOrDie(fs, tmp, dst, "the tombstone set is complete; masked " +
+      "loads take the plain anti-join until the sidecar is rebuilt")
   }
 
   private def restoreConf(spark: SparkSession, key: String,
@@ -266,7 +274,7 @@ private[graft] object Tombstones {
   def maskAt(spark: SparkSession, tombDir: String, df: DataFrame,
              keyCols: Seq[String]): DataFrame = {
     if (!existAt(spark, tombDir)) return df
-    val tomb = spark.read.parquet(tombDir).select(keyCols.map(col): _*)
+    val tomb = spark.read.schema(keySchema(df, keyCols)).parquet(tombDir)
     val minBytes = spark.conf
       .get(BloomMinBytesKey, BloomMinBytesDefault.toString).toLong
     val bloom =
@@ -307,7 +315,9 @@ private[graft] object Tombstones {
     * never a resurrection. Renames are checked ([[renameOrDie]] —
     * Hadoop signals failure by returning false, not throwing). A
     * leftover `_old` NEXT TO a live dir is a post-swap crash artifact
-    * (the live dir is authoritative) and is cleared up front. */
+    * (the live dir is authoritative) and is cleared up front. `keys`
+    * carries every tombstone column (keys plus partition column): its
+    * schema is the set's declared file schema. */
   def removeKeysAt(spark: SparkSession, tombDir: String,
                    keys: DataFrame, keyCols: Seq[String]): Unit = {
     if (!existAt(spark, tombDir)) return
@@ -315,17 +325,16 @@ private[graft] object Tombstones {
     val dir = new org.apache.hadoop.fs.Path(tombDir)
     val fs = dir.getFileSystem(hconf)
     val keySet = keys.select(keyCols.map(col): _*).dropDuplicates(keyCols)
+    val tombs = spark.read.schema(keys.schema).parquet(tombDir)
     // existence precheck: when NO key is actually tombstoned (the
     // common INSERT — brand-new facts), skip the set rewrite AND the
     // bloom rebuild entirely (one limit-1 probe vs three write jobs)
-    if (spark.read.parquet(tombDir).join(keySet, keyCols, "left_semi")
-        .limit(1).isEmpty) return
-    val remaining = spark.read.parquet(tombDir)
-      .join(keySet, keyCols, "left_anti")
+    if (tombs.join(keySet, keyCols, "left_semi").limit(1).isEmpty) return
     val staging = tombDir + "_staging"
-    remaining.write.mode("overwrite").parquet(staging)
+    tombs.join(keySet, keyCols, "left_anti")
+      .write.mode("overwrite").parquet(staging)
     val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    val n = spark.read.parquet(staging).count()
+    val n = spark.read.schema(keys.schema).parquet(staging).count()
     val oldPath = new org.apache.hadoop.fs.Path(tombDir + "_old")
     // a leftover `_old` alongside a LIVE dir is a prior crash's
     // post-swap artifact (the live dir is authoritative) — clear it;
@@ -338,62 +347,59 @@ private[graft] object Tombstones {
       // same activation gate as [[appendAt]]: a survivor set below the
       // mask's bloom threshold never has its sidecar consulted
       if (bloomWorthwhile(spark, tombDir))
-        refreshBloom(spark, tombDir, keyCols)
+        refreshBloom(spark, tombDir, keySchema(keys, keyCols))
     }
     fs.delete(oldPath, true)
     spark.catalog.refreshByPath(tombDir)
   }
 
-  /** Physically drop tombstoned rows from a `partitionBy(partCol)`
-    * store. Partition-pruned: only partitions named in the tombstones
-    * are even scanned to find affected files, and only files holding a
-    * deleted row are rewritten (staging-then-swap, same discipline as
-    * the index compactors). Clears the tombstone set at the end.
-    */
-  def compactPartitioned(spark: SparkSession, store: String,
-                         keyCols: Seq[String], partCol: String): Unit = {
-    if (!exist(spark, store)) return
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(hconf)
-    val tomb = spark.read.parquet(tombPath(store))
-    // bounded by the store's partition count (predicates / pred ids)
-    val parts = tomb.select(partCol).distinct().collect().map(_.get(0))
-    val keys = tomb.select(keyCols.map(col): _*)
-    // file list bounded by the AFFECTED partitions' file count
-    val affected = spark.read.parquet(store)
-      .where(col(partCol).isin(parts.toIndexedSeq: _*))
-      .withColumn("_f", input_file_name())
+  /** Physically drop tombstoned rows: rewrite ONLY the files of `scan`
+    * (a read of `store`) that hold a tombstoned key, via
+    * `_compact_staging`, then clear the tombstone set. Staged files move
+    * in through [[renameOrDie]]: the originals are gone by then, so a
+    * failed rename throws and keeps the staging dir (its rows' only
+    * copy) and the tombstone set; later compactions refuse to run,
+    * since their staging write would overwrite those rows. */
+  def compact(spark: SparkSession, store: String, scan: DataFrame,
+              keys: DataFrame, keyCols: Seq[String],
+              partCol: Option[String]): Unit = {
+    val root = new org.apache.hadoop.fs.Path(store)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new org.apache.hadoop.fs.Path(root, "_compact_staging")
+    if (fs.exists(staging))
+      throw new java.io.IOException(s"$staging exists: an earlier " +
+        "compaction stopped mid-swap and its staged rows may be the only " +
+        "copy of live data — move them into the store or remove the " +
+        "directory, then retry")
+    // file list bounded by the scanned files that hold a deleted row
+    val affected = scan.withColumn("_f", input_file_name())
       .join(keys, keyCols).select("_f").distinct()
       .collect().map(_.getString(0))
     if (affected.nonEmpty) {
-      val staging = s"$store/_compact_staging"
-      // re-read through the store root and filter to the affected files
-      // by the SAME input_file_name() strings the listing produced —
-      // feeding those URI-encoded strings back into spark.read.parquet
-      // would mis-resolve partition values that needed escaping (a pred
-      // lex containing '/' lands on disk as pred=...%2F... and in the
-      // URI as %252F); string-equality against the same function cannot
-      val affectedSet = affected.toSet
-      spark.read.parquet(store)
-        .where(col(partCol).isin(parts.toIndexedSeq: _*))
-        .where(input_file_name().isInCollection(affectedSet))
-        .join(keys, keyCols, "left_anti")
-        .write.mode("overwrite").partitionBy(partCol).parquet(staging)
+      // filter to the affected files by the SAME input_file_name()
+      // strings the listing produced — feeding those URI-encoded strings
+      // back into spark.read.parquet would mis-resolve partition values
+      // that needed escaping (a pred lex containing '/' lands on disk as
+      // pred=...%2F... and in the URI as %252F)
+      val survivors = scan
+        .where(input_file_name().isInCollection(affected.toSet))
+        .join(keys, keyCols, "left_anti").write.mode("overwrite")
+      partCol.fold(survivors)(survivors.partitionBy(_)).parquet(staging.toString)
       affected.foreach(f =>
         fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(f)), false))
-      val stagingPath = new org.apache.hadoop.fs.Path(staging)
-      fs.listStatus(stagingPath).foreach { d =>
-        if (d.isDirectory && d.getPath.getName.startsWith(partCol + "=")) {
-          val dest = new org.apache.hadoop.fs.Path(store, d.getPath.getName)
-          fs.mkdirs(dest)
-          fs.listStatus(d.getPath).foreach { st =>
-            if (st.getPath.getName.endsWith(".parquet"))
-              fs.rename(st.getPath,
-                new org.apache.hadoop.fs.Path(dest, st.getPath.getName))
-          }
-        }
+      val files = fs.listFiles(staging, true)
+      val staged = Iterator.continually(files).takeWhile(_.hasNext)
+        .map(_.next().getPath).filter(_.getName.endsWith(".parquet")).toList
+      staged.foreach { src =>
+        val dir =
+          if (partCol.isEmpty) root
+          else new org.apache.hadoop.fs.Path(root, src.getParent.getName)
+        fs.mkdirs(dir)
+        renameOrDie(fs, src, new org.apache.hadoop.fs.Path(dir, src.getName),
+          s"the surviving rows of the rewritten files are in $staging " +
+            "and the tombstone set is kept")
       }
-      fs.delete(stagingPath, true)
+      fs.delete(staging, true)
     }
     fs.delete(new org.apache.hadoop.fs.Path(tombPath(store)), true)
     // files were replaced in place — drop cached listings so open

@@ -88,12 +88,8 @@ object TripleDb {
     * predicate index: a ground-predicate pattern scan prunes to one
     * partition directory instead of touching the whole store.
     */
-  def save(db: TripleDb, path: String): Unit = {
-    val predName = when(col("p.kind") === Term.KKeyword, col("p.lex"))
-      .otherwise(lit("__other"))
-    db.df.withColumn("pred", predName)
-      .write.mode("overwrite").partitionBy("pred").parquet(path)
-  }
+  def save(db: TripleDb, path: String): Unit =
+    layout.write(db.df, path, "overwrite")
 
   /** Subject-bucketed durable store: writes the triple table bucketed
     * (and sorted) by the encoded subject. BGP conjunctions join
@@ -117,23 +113,11 @@ object TripleDb {
     * The tombstones carry the predicate partition value so compaction
     * prunes to the affected `pred=` directories.
     */
-  def deleteTriples(triples: DataFrame, path: String): Unit = {
-    val predName = when(col("p.kind") === Term.KKeyword, col("p.lex"))
-      .otherwise(lit("__other"))
-    Tombstones.append(
-      triples.select(col("s"), col("p"), col("o"), predName.as("pred")), path,
-      keyCols = Seq("s", "p", "o"))
-  }
+  def deleteTriples(triples: DataFrame, path: String): Unit =
+    layout.delete(triples, path)
 
-  /** The masked triple FRAME of a [[save]]d store, without slice/stats
-    * building — the mutation-internal read (≙ [[QuadDb.loadFrame]]):
-    * semi/anti-join and filter callers never touch predicate slices,
-    * so [[load]]'s partition-listing job (the `pred` distinct collect)
-    * and per-slice stats are pure overhead there. Query paths keep
-    * [[load]]. */
-  private[graft] def loadFrame(spark: SparkSession, path: String): DataFrame =
-    Tombstones.mask(spark, path, spark.read.parquet(path),
-      Seq("s", "p", "o")).drop("pred")
+  /** Durable file layout of [[save]]. */
+  private[graft] val layout: StoreLayout = StoreLayout.byPredicate(schema)
 
   /** Delete EVERY fact about the given subjects (the usual takedown
     * unit): one masked scan of the store finds their live triples,
@@ -142,9 +126,7 @@ object TripleDb {
     */
   def deleteSubjects(spark: SparkSession, path: String,
                      subjects: DataFrame): Unit =
-    deleteTriples(
-      loadFrame(spark, path).join(subjects.select("s"), Seq("s"), "left_semi"),
-      path)
+    layout.deleteSubjects(spark, path, subjects)
 
   /** Physically drop tombstoned triples: only the affected predicate
     * partitions are scanned and only files holding a deleted triple are
@@ -152,7 +134,7 @@ object TripleDb {
     * (spec-pinned). Load before and after are equivalent.
     */
   def compact(spark: SparkSession, path: String): Unit =
-    Tombstones.compactPartitioned(spark, path, Seq("s", "p", "o"), "pred")
+    layout.compact(spark, path)
 
   /** Save as JSON-lines — one `{"s":{…},"p":{…},"o":{…}}` object per
     * line. Schema-exact interchange sink: JSON escaping handles any
@@ -170,24 +152,13 @@ object TripleDb {
   def loadJsonl(spark: SparkSession, path: String): TripleDb =
     TripleDb(spark.read.schema(schema).json(path))
 
-  /** Load a [[save]]d store, rebuilding the predicate index from the
-    * partition directories (slices prune partitions at scan time). */
+  /** Load a [[save]]d store: predicate slices from the partition
+    * directories (slices prune partitions at scan time), per-slice
+    * sizes from file metadata, tombstoned triples masked. Runs no
+    * Spark job ([[StoreLayout]]). */
   def load(spark: SparkSession, path: String): TripleDb = {
-    val raw0 = spark.read.parquet(path)
-    // deleted-but-not-yet-compacted triples are masked at read
-    val raw = Tombstones.mask(spark, path, raw0, Seq("s", "p", "o"))
-    // metadata-only job: distinct values of a partition column
-    val preds = raw0.select("pred").distinct().collect()
-      .map(_.getString(0)).filter(_ != "__other")
-    val slices = preds.map { name =>
-      name -> raw.where(col("pred") === name).drop("pred")
-    }.toMap
-    // per-slice size after partition pruning — parquet metadata only
-    val stats = slices.map { case (name, slice) =>
-      name -> slice.queryExecution.optimizedPlan.stats.sizeInBytes
-        .min(BigInt(Long.MaxValue)).toLong
-    }
-    TripleDb(raw.drop("pred"), slices, stats)
+    val (df, slices, stats) = layout.open(spark, path)
+    TripleDb(df, slices, stats)
   }
 
   /** VoID-style dataset statistics (W3C "Vocabulary of Interlinked

@@ -77,7 +77,8 @@ object TermPackExpressions {
   }
 
   /** The `idx`-th term of a [[TermsPack]] binary, back as a struct —
-    * the exact inverse (bit-exact doubles, byte-exact strings). */
+    * the exact inverse (bit-exact doubles, byte-exact strings). An
+    * index past the packed arity fails with an explicit error. */
   case class TermUnpackAt(child: Expression, idx: Int)
       extends UnaryExpression with CodegenFallback {
     require(idx >= 0, "index must be non-negative")
@@ -90,6 +91,9 @@ object TermPackExpressions {
       var k = 0
       var result: Any = null
       while (k <= idx) {
+        if (in.available() == 0)
+          throw new IllegalArgumentException(
+            s"index $idx out of range for packed terms (arity $k)")
         val kind = in.readByte()
         if (kind == NullStruct) {
           if (k == idx) result = null

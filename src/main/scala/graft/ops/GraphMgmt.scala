@@ -139,7 +139,7 @@ object GraphMgmt {
       .localCheckpoint() // lineage cut: the resurrection step below
                          // rewrites the tombstone set mid-flight
     Update.appendNovelQuads(spark, path, quads)
-    freeCheckpoint(quads)
+    Update.freeCheckpoint(quads)
   }
 
   /** Durable `CLEAR GRAPH g` ≡ `DROP GRAPH g`: tombstone the graph's
@@ -184,7 +184,7 @@ object GraphMgmt {
     val src = retagged(QuadDb.loadFrame(spark, path), from, to)
       .localCheckpoint()
     Update.appendNovelQuads(spark, path, src)
-    freeCheckpoint(src)
+    Update.freeCheckpoint(src)
   }
 
   /** Durable `COPY from TO to`: clear the destination, then add. The
@@ -197,7 +197,7 @@ object GraphMgmt {
       .localCheckpoint()
     clearGraph(spark, path, to)
     Update.appendNovelQuads(spark, path, src)
-    freeCheckpoint(src)
+    Update.freeCheckpoint(src)
   }
 
   /** Durable `MOVE from TO to` ≡ COPY then DROP the source, batched
@@ -231,13 +231,6 @@ object GraphMgmt {
     // same no-op probe discipline as [[clearGraph]]: never mint an
     // empty tombstone set
     if (!doomed.limit(1).isEmpty) QuadDb.deleteQuads(doomed, path)
-    freeCheckpoint(src)
+    Update.freeCheckpoint(src)
   }
-
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ =>
-    }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.{QuadDb, Term, Tombstones, TripleDb}
+import graft.core.{QuadDb, StoreLayout, Term, Tombstones, TripleDb}
 import graft.dsl._
 import graft.engine.Projections
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -142,10 +142,6 @@ object Update {
   // Durable forms (saved predicate-partitioned stores; delta writes)
   // ---------------------------------------------------------------
 
-  private def predName: Column =
-    when(col("p.kind") === Term.KKeyword, col("p.lex"))
-      .otherwise(lit("__other"))
-
   /** Durable `DELETE WHERE`: evaluates the WHERE against the LIVE
     * (masked) store and tombstones the matched facts — one tiny
     * append, nothing rewritten ([[TripleDb.deleteTriples]]'s GDPR
@@ -175,7 +171,7 @@ object Update {
     // against post-mutation state (caught by UpdateSpec's quad leg).
     // Cutting lineage pins the pre-mutation solutions physically.
     val inserts = constructTriples(db, templates, where).localCheckpoint()
-    appendNovel(spark, path, inserts)
+    appendNovel(spark, path, inserts, TripleDb.layout)
     freeCheckpoint(inserts)
   }
 
@@ -197,7 +193,7 @@ object Update {
       .join(db.df, Seq("s", "p", "o"), "left_semi").localCheckpoint()
     val inserts = instantiate(sol, insertTs).localCheckpoint()
     TripleDb.deleteTriples(doomed, path)
-    appendNovel(spark, path, inserts)
+    appendNovel(spark, path, inserts, TripleDb.layout)
     freeCheckpoint(sol); freeCheckpoint(doomed); freeCheckpoint(inserts)
   }
 
@@ -268,44 +264,34 @@ object Update {
   /** Resurrect re-asserted tombstoned quads, then append only the
     * genuinely novel ones into the predicate-partitioned layout — the
     * shared durable-insert tail ([[GraphMgmt]]'s LOAD/ADD/COPY use it
-    * too). `inserts` must be LINEAGE-CUT by the caller (an eager
-    * localCheckpoint): the resurrection step rewrites the tombstone
-    * set, and an uncut frame would silently recompute against
-    * post-mutation state. */
+    * too). `inserts` that read the store must be LINEAGE-CUT by the
+    * caller (an eager localCheckpoint): the resurrection step rewrites
+    * the tombstone set, and an uncut frame would silently recompute
+    * against post-mutation state. */
   private[graft] def appendNovelQuads(spark: SparkSession, path: String,
-                                      inserts: DataFrame): Unit = {
-    Tombstones.removeKeysAt(spark, Tombstones.tombPath(path), inserts,
-      Seq("s", "p", "o", "g"))
-    val novel = inserts.join(QuadDb.loadFrame(spark, path),
-      Seq("s", "p", "o", "g"), "left_anti").localCheckpoint()
-    if (!novel.isEmpty)
-      novel.withColumn("pred", predName)
-        .write.mode("append").partitionBy("pred").parquet(path)
-    freeCheckpoint(novel)
-    spark.catalog.refreshByPath(path)
-  }
+                                      inserts: DataFrame): Unit =
+    appendNovel(spark, path, inserts, QuadDb.layout)
 
-  /** Resurrect tombstoned re-assertions, then append the novel rest. */
+  /** Resurrect tombstoned re-assertions, then append the novel rest.
+    * The append is ONE job: the novel rows (anti-joined against the
+    * POST-resurrection live view, so a resurrected fact is not
+    * re-appended) are written directly. The write never reads its own
+    * output — the store's file listing is fixed when the write plan is
+    * analyzed — and an empty partitioned append writes no data file. */
   private def appendNovel(spark: SparkSession, path: String,
-                          inserts: DataFrame): Unit = {
-    Tombstones.removeKeysAt(spark, Tombstones.tombPath(path), inserts,
-      Seq("s", "p", "o"))
-    // against the POST-resurrection live view: a resurrected fact is
-    // live again, so it is not re-appended (no physical duplicates);
-    // checkpointed so the append never reads the store mid-write
-    val novel = inserts.join(TripleDb.loadFrame(spark, path),
-      Seq("s", "p", "o"), "left_anti").localCheckpoint()
-    if (!novel.isEmpty)
-      novel.withColumn("pred", predName)
-        .write.mode("append").partitionBy("pred").parquet(path)
-    freeCheckpoint(novel)
+                          inserts: DataFrame, layout: StoreLayout): Unit = {
+    Tombstones.removeKeysAt(spark, Tombstones.tombPath(path),
+      layout.withPart(inserts), layout.keyCols)
+    layout.write(
+      inserts.join(layout.frame(spark, path), layout.keyCols, "left_anti"),
+      path, "append")
     spark.catalog.refreshByPath(path)
   }
 
   /** Drop a localCheckpoint'd frame's cached blocks (the Bpe
     * freeCheckpoint pattern — an unpersisted checkpoint block
     * otherwise pins heap until the cleaner's periodic GC). */
-  private def freeCheckpoint(df: DataFrame): Unit =
+  private[ops] def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -13,12 +14,18 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * firecracker scheduling floor (SURVEY §8.3), so `explain` on the
   * returned frame sees only the final query — this listener sees every
   * job the entry ran. Evidence tool for OPTIMIZATION_r15.md.
+  *
+  * Under each entry, its jobs are grouped by their innermost `graft.`
+  * call-site frame, so each count names the library call that ran it.
   */
 object JobCount {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // a call site keeps 20 frames by default, which a Spark SQL action's
+    // own frames use up before any graft frame
+    System.setProperty("spark.callstack.depth", "400")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -35,16 +42,33 @@ object JobCount {
       }
     })
     spark.sparkContext.setLogLevel("WARN")
-    val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicLong(0L)
     // shuffle bytes written across the entry's stages: the deterministic
     // evidence for exchange-narrowing changes (wall seconds on this box
     // are stall-window noise; bytes are not)
     val shufW = new AtomicLong(0L)
+    val sites = scala.collection.concurrent.TrieMap.empty[String, AtomicInteger]
+    // jobs a query runs on other threads (broadcasts) carry no graft
+    // frame; they fall back to their SQL execution's call site
+    val execSites = scala.collection.concurrent.TrieMap.empty[String, String]
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          graftFrame(x.details).foreach(execSites.put(x.executionId.toString, _))
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        // the result stage (highest id; earlier stages may be reused
+        // from other jobs) carries the job's call site
+        val site = j.stageInfos.maxByOption(_.stageId)
+          .flatMap(st => graftFrame(st.details))
+          .orElse(Option(j.properties)
+            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .flatMap(execSites.get))
+          .getOrElse("(no graft frame)")
+        sites.getOrElseUpdate(site, new AtomicInteger).incrementAndGet()
+      }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
         tasks.addAndGet(s.stageInfo.numTasks.toLong)
@@ -63,13 +87,22 @@ object JobCount {
       // entry's events don't attribute here (fixed sleeps skewed
       // counts when delivery outran them — round-16 ADVICE item)
       org.apache.spark.GraftCoreBridge.drainListenerBus(spark.sparkContext)
-      jobs.set(0); stages.set(0); tasks.set(0L); shufW.set(0L)
+      stages.set(0); tasks.set(0L); shufW.set(0L); sites.clear()
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
       org.apache.spark.GraftCoreBridge.drainListenerBus(spark.sparkContext)
-      println(f"$name%-28s ${jobs.get}%6d ${stages.get}%7d ${tasks.get}%8d ${shufW.get / 1024}%9d $dt%8.2f")
+      val jobs = sites.values.map(_.get).sum
+      println(f"$name%-28s $jobs%6d ${stages.get}%7d ${tasks.get}%8d ${shufW.get / 1024}%9d $dt%8.2f")
+      sites.toSeq.map { case (site, n) => (n.get, site) }
+        .sortBy { case (n, site) => (-n, site) }
+        .foreach { case (n, site) => println(f"  $n%6d  $site") }
     }
     spark.stop()
   }
+
+  /** The innermost `graft.` frame of a call site's long form (one
+    * stack frame per line). */
+  private def graftFrame(details: String): Option[String] =
+    Option(details).flatMap(_.linesIterator.map(_.trim).find(_.startsWith("graft.")))
 }

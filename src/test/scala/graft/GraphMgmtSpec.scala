@@ -1,8 +1,9 @@
 package graft
 
-import graft.core.{QuadDb, Term, TripleDb}
+import graft.core.{QuadDb, Term, Tombstones, TripleDb}
 import graft.core.Term._
 import graft.ops.GraphMgmt
+import graft.sparql.{InsertData, SparqlUpdate}
 
 /** SPARQL Update §3.2 graph management (ops/GraphMgmt): value forms
   * over [[QuadDb]]s and durable delta forms over saved stores. */
@@ -124,5 +125,117 @@ class GraphMgmtSpec extends GraftSpec {
     // compaction agrees (tombstones were well-formed)
     QuadDb.compact(spark, store)
     assert(quadSet(QuadDb.load(spark, store)) == cleared)
+  }
+
+  /** Spark jobs started by `body`, the listener bus drained on both
+    * sides so no earlier or later job is counted. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftCoreBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftCoreBridge.drainListenerBus(sc)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def dataFiles(store: String): Int = {
+    val root = new org.apache.hadoop.fs.Path(store)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(root, true)
+    var n = 0
+    while (it.hasNext) {
+      val p = it.next().getPath
+      if (p.getName.endsWith(".parquet") &&
+          !p.toString.contains(Tombstones.Dir)) n += 1
+    }
+    n
+  }
+
+  test("opening a durable store runs no Spark job: QuadDb.load, " +
+      "TripleDb.load and both frame-only opens, with tombstones present") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_gm_open").toString
+    val qs = s"$tmp/quads"
+    QuadDb.save(base, qs)
+    GraphMgmt.clearGraph(spark, qs, g2)
+    val ts = s"$tmp/triples"
+    TripleDb.save(base.toTriples, ts)
+    TripleDb.deleteSubjects(spark, ts, db((k("b"), k("q"), l(3))).df)
+    assert(Tombstones.exist(spark, qs) && Tombstones.exist(spark, ts))
+    var q: QuadDb = null
+    var t: TripleDb = null
+    assert(jobsDuring {
+      q = QuadDb.load(spark, qs)
+      t = TripleDb.load(spark, ts)
+      QuadDb.loadFrame(spark, qs)
+      TripleDb.layout.frame(spark, ts)
+    } == 0)
+    // the opened stores answer as before: masked rows gone, one slice
+    // per keyword predicate directory, stats from file metadata
+    assert(quadSet(q) == quadSet(base).filterNot(_._4 == g2))
+    assert(q.predIndex.keySet == Set("p", "q", "r"))
+    assert(q.predIndex("p").count() == 2)
+    assert(q.stats.keySet == q.predIndex.keySet && q.stats.values.forall(_ > 0))
+    assert(t.triples.toSet == Set(
+      (k("a"), k("p"), l(1)), (k("a"), k("p"), l(2)), (k("c"), k("r"), l(4))))
+    assert(t.predIndex.keySet == Set("p", "q", "r"))
+  }
+
+  test("INSERT DATA of quads that are already live adds no data file; " +
+      "a novel quad is appended") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_gm_ins").toString
+    val store = s"$tmp/store"
+    QuadDb.save(base, store)
+    val before = dataFiles(store)
+    SparqlUpdate.run(spark, store, Seq(InsertData(base.quads)))
+    assert(dataFiles(store) == before)
+    assert(quadSet(QuadDb.load(spark, store)) == quadSet(base))
+    val novel = (k("d"), k("p"), l(5), g3)
+    SparqlUpdate.run(spark, store, Seq(InsertData(Seq(novel))))
+    assert(dataFiles(store) > before)
+    assert(quadSet(QuadDb.load(spark, store)) == quadSet(base) + novel)
+  }
+
+  test("a store whose only keyword predicate looks numeric (2020) " +
+      "saves and loads, for QuadDb and TripleDb") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_gm_num").toString
+    val facts = Seq((k("a"), k("2020"), l(1)), (k("b"), k("2020"), l(2)))
+    TripleDb.save(db(facts: _*), s"$tmp/triples")
+    val t = TripleDb.load(spark, s"$tmp/triples")
+    assert(t.triples.toSet == facts.toSet)
+    assert(t.predIndex.keySet == Set("2020"))
+    assert(t.predIndex("2020").count() == 2)
+    val quads = facts.map { case (s, p, o) => (s, p, o, g1) }
+    QuadDb.save(QuadDb.fromQuads(spark, quads), s"$tmp/quads")
+    val q = QuadDb.load(spark, s"$tmp/quads")
+    assert(quadSet(q) == quads.toSet)
+    assert(q.predIndex.keySet == Set("2020"))
+    assert(q.predIndex("2020").count() == 2)
+  }
+
+  test("compaction refuses to run over a leftover _compact_staging " +
+      "(an earlier swap's rows may live only there); tombstones stay") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_gm_stage").toString
+    val store = s"$tmp/store"
+    QuadDb.save(base, store)
+    GraphMgmt.clearGraph(spark, store, g2)
+    val live = quadSet(QuadDb.load(spark, store))
+    val staging = new java.io.File(s"$store/_compact_staging")
+    assert(staging.mkdir())
+    val e = intercept[java.io.IOException](QuadDb.compact(spark, store))
+    assert(e.getMessage.contains("_compact_staging exists"))
+    assert(Tombstones.exist(spark, store))
+    assert(quadSet(QuadDb.load(spark, store)) == live)
+    assert(staging.delete())
+    QuadDb.compact(spark, store)
+    assert(!Tombstones.exist(spark, store))
+    assert(quadSet(QuadDb.load(spark, store)) == live)
   }
 }

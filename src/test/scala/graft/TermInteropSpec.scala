@@ -364,4 +364,18 @@ class TermInteropSpec extends GraftSpec {
     assert(nr.isNullAt(0))
     assert(nr.getStruct(1) == nr.getStruct(2))
   }
+
+  test("unpackTermAt past the packed arity fails with an explicit " +
+      "out-of-range error, not a task-time EOF") {
+    import graft.functions.TermPackExpressions._
+    val d = db((k("a"), k("p"), l(1)))
+    val e = intercept[Exception] {
+      d.df.select(unpackTermAt(packTerms(col("s"), col("o")), 2)).collect()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).toList
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains(
+      "index 2 out of range for packed terms (arity 2)")), causes.mkString("\n"))
+    assert(!causes.exists(_.isInstanceOf[java.io.EOFException]))
+  }
 }
